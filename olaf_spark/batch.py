@@ -285,7 +285,11 @@ def _run_batch(
         candidates.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
-    mapping = spark.createDataFrame(plan.mapping, "rep long, query_id long")
+    # from an Arrow table: a local relation, no Python-worker job
+    import pyarrow as pa
+
+    rep_q = np.asarray(plan.mapping, dtype=np.int64).reshape(-1, 2)
+    mapping = spark.createDataFrame(pa.table({"rep": rep_q[:, 0], "query_id": rep_q[:, 1]}))
     return ranked.join(F.broadcast(mapping), "rep").select(
         "query_id", "doc_id", "score", F.col("rank").cast("long").alias("rank")
     )

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     bucket_expr,
+    read_packed,
     shard_from_id_col,
     sorted_tombstone_arr,
     term_id_col,
@@ -239,7 +240,11 @@ def build_bigrams(
         pairs = adjacent_pairs_df(
             rebalance_scan(spark, docs, id_col), text_col, id_col, cfg
         )
-        heads_df = spark.createDataFrame([(int(h),) for h in heads], "head_id long")
+        # from an Arrow table: a local relation, no Python-worker job (a
+        # list of tuples is parallelized through one)
+        import pyarrow as pa
+
+        heads_df = spark.createDataFrame(pa.table({"head_id": heads}))
         occ = (
             pairs.withColumn("t1_id", term_id_col(F.col("t1")))
             .withColumn("t2_id", term_id_col(F.col("t2")))
@@ -266,7 +271,7 @@ def build_bigrams(
         packed = (
             occ.repartition(n_tasks, b_expr, F.col("term_id"))
             .sortWithinPartitions("term_id", "doc_id", "pos")
-            .mapInPandas(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
+            .mapInArrow(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
             .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
         )
         packed = cluster_for_write(packed, "tb", n_tasks, cfg.n_segments)
@@ -442,14 +447,14 @@ def compact_bigrams(
     width = max(1, (hi - lo) // n_buckets + 1)
     bts = spark.sparkContext.broadcast(sorted_tombstone_arr(tombstones))
 
-    from olaf_spark.incremental import _first_doc_udf
+    from olaf_spark.incremental import first_doc_col
     from olaf_spark.phrase import POSITIONS_SCHEMA, _make_fold_positions
 
     rows = None
     for d in part_dirs:
         if not has_bigram_rows(d):
             continue  # committed-but-rowless part: authoritative empty
-        r = spark.read.parquet(os.path.join(d, "bigrams"))
+        r = read_packed(spark, os.path.join(d, "bigrams"), POSITIONS_SCHEMA)
         rows = r if rows is None else rows.unionByName(r)
     if rows is not None:
         if n_merge_tasks is None:
@@ -462,10 +467,10 @@ def compact_bigrams(
             rows.select(
                 "term_id", "doc_ids_bin", "pos_counts_bin", "pos_bin", "pos_offs", "tb"
             )
-            .withColumn("first_doc", _first_doc_udf()(F.col("doc_ids_bin")))
+            .withColumn("first_doc", first_doc_col())
             .repartitionByRange(n_merge_tasks, "tb", "term_id", "first_doc")
             .sortWithinPartitions("term_id", "first_doc")
-            .mapInPandas(
+            .mapInArrow(
                 _make_fold_positions(lo, width, n_buckets, bts), POSITIONS_SCHEMA
             )
             .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))

@@ -7,9 +7,13 @@ values contiguously (`olaf_db.c:101-114`). Here the same idea for text
 postings: doc_ids are sorted ascending, gap-encoded (delta), then varbyte
 (LEB128) packed; tfs are varbyte packed directly.
 
-Everything is numpy-vectorized — these functions run inside Arrow-batched
-pandas UDFs on executors (no per-row Python), so encode/decode throughput
-is the knob that sets index size and posting-scan speed at 100 TB.
+Everything is numpy-vectorized. The build, merge and compaction kernels
+run inside `mapInArrow` on executors and work on whole Arrow columns: a
+binary column decodes in ONE varbyte pass over its data buffer
+(binary_values), and packed output columns are assembled from offsets
+straight into Arrow buffers (binary_array, list_array) — no per-row or
+per-term Python, no per-row `bytes` objects. Encode/decode throughput is
+the knob that sets index size and posting-scan speed at 100 TB.
 
 Block-max metadata: postings are split into fixed-size blocks of
 ``block_size`` docs; per block we keep (last_doc_id, max_score_quantum) so
@@ -138,100 +142,123 @@ def delta_encode_grouped(values: np.ndarray, group_starts: np.ndarray) -> np.nda
     return out
 
 
-def encode_grouped(
-    values: np.ndarray,
-    group_starts: np.ndarray,
-    delta: bool,
-    delta_starts: np.ndarray | None = None,
-) -> list[bytes]:
-    """Varbyte-encode MANY posting lists in ONE vectorized pass.
+# ---- whole-column Arrow kernels' building blocks --------------------------
+#
+# A packed column is a concatenation of per-row LEB128 runs, so an Arrow
+# binary column's data buffer decodes in ONE varbyte_decode; row boundaries
+# come back as per-row value counts (terminal bytes per row). Delta runs
+# restart at known positions (row starts, block starts, doc starts), which a
+# single cumsum minus the running total at each restart undoes. Encoding is
+# the mirror image: one _varbyte_encode_arr over the concatenated values, and
+# the per-value byte starts ARE the output column's offsets.
 
-    values: concatenated per-group arrays; group_starts: start index of each
-    group. Returns one bytes object per group. This is the executor hot path
-    of the index build — per-group Python work is a single bytes() slice.
 
-    delta_starts (optional, superset of group_starts): positions whose value
-    stays ABSOLUTE instead of gap-encoded — block-restart points that make
-    each block independently decodable (lazy block decode).
-    """
+def seg_starts(counts: np.ndarray) -> np.ndarray:
+    """Exclusive cumsum: start index of each segment of the given lengths."""
+    c = np.asarray(counts, dtype=np.int64)
+    out = np.zeros(c.size, dtype=np.int64)
+    np.cumsum(c[:-1], out=out[1:])
+    return out
+
+
+def strided_starts(
+    starts: np.ndarray, lens: np.ndarray, step: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every segment's sub-starts at offsets 0, step, 2*step, ... inside it
+    (block starts inside chunks, chunk starts inside terms), concatenated,
+    plus the owning segment of each. Empty segments own none."""
+    k = (np.asarray(lens, dtype=np.int64) + step - 1) // step
+    owner = np.repeat(np.arange(k.size), k)
+    ordinal = np.arange(owner.size, dtype=np.int64) - np.repeat(seg_starts(k), k)
+    return np.asarray(starts, dtype=np.int64)[owner] + ordinal * step, owner
+
+
+def restart_cumsum(vals: np.ndarray, restarts: np.ndarray) -> np.ndarray:
+    """Undo a delta encoding whose value is ABSOLUTE at every restart
+    (sorted, restarts[0] == 0): one cumsum minus the running total before
+    each restart. uint64 arithmetic wraps, so signed ids round-trip."""
+    n = vals.size
+    if n == 0:
+        return np.asarray(vals, dtype=np.uint64)
+    c = np.cumsum(vals, dtype=np.uint64)
+    cpad = np.zeros(n + 1, dtype=np.uint64)
+    cpad[1:] = c
+    r = np.asarray(restarts, dtype=np.int64)
+    return c - np.repeat(cpad[r], np.diff(np.append(r, n)))
+
+
+def binary_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Raw bytes of an Arrow binary column plus each row's byte start (n + 1
+    entries, the last is the total), zero-copy; honours slice offsets and
+    64-bit (large) offsets."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    _, obuf, dbuf = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(obuf, dtype=odt)[arr.offset: arr.offset + len(arr) + 1]
+    offs = offs.astype(np.int64)
+    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.empty(0, np.uint8)
+    return data[offs[0]: offs[-1]], offs - offs[0]
+
+
+def binary_values(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a whole Arrow binary column of varbyte runs in ONE pass:
+    (concatenated uint64 values, per-row value counts)."""
+    data, offs = binary_bytes(arr)
+    vals = varbyte_decode(data)
+    ends = np.zeros(data.size + 1, dtype=np.int64)
+    np.cumsum((data & 0x80) == 0, out=ends[1:])
+    return vals, np.diff(ends[offs])
+
+
+def encode_values(
+    values: np.ndarray, restarts: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Varbyte-encode concatenated values in one pass, gap-encoding them
+    when `restarts` (positions that stay absolute) is given. Returns
+    (bytes, byte start of every value plus the total: n + 1 entries)."""
     v = np.asarray(values, dtype=np.uint64)
-    n_groups = len(group_starts)
+    vstart = np.zeros(v.size + 1, dtype=np.int64)
     if v.size == 0:
-        return [b""] * n_groups
-    if delta:
-        v = delta_encode_grouped(v, delta_starts if delta_starts is not None else group_starts)
+        return np.empty(0, dtype=np.uint8), vstart
+    if restarts is not None:
+        v = delta_encode_grouped(v, restarts)
     buf, nbytes = _varbyte_encode_arr(v)
-    value_byte_starts = np.concatenate([[0], np.cumsum(nbytes)])
-    gb = value_byte_starts[group_starts]
-    ge = np.concatenate([gb[1:], [value_byte_starts[-1]]])
-    raw = buf.tobytes()
-    return [raw[int(s):int(e)] for s, e in zip(gb, ge)]
+    np.cumsum(nbytes, out=vstart[1:])
+    return buf, vstart
 
 
-def block_starts_for_groups(
-    group_starts: np.ndarray, total: int, block_size: int
-) -> np.ndarray:
-    """Concatenated per-group block-start indices (each group's blocks start
-    at its own offset 0, block_size, 2*block_size, ...) — the delta-restart
-    points for independently decodable blocks."""
-    gs = np.asarray(group_starts, dtype=np.int64)
-    ge = np.append(gs[1:], total)
-    out = [np.arange(s, e, block_size, dtype=np.int64) for s, e in zip(gs, ge)]
-    return np.concatenate(out) if out else np.empty(0, dtype=np.int64)
+def binary_array(buf: np.ndarray, row_starts: np.ndarray, total: int | None = None):
+    """Arrow binary column whose row i is buf[row_starts[i]:row_starts[i+1]]
+    (the last row ends at `total`, default len(buf)) — built from offsets,
+    with no per-row bytes objects."""
+    import pyarrow as pa
+
+    offs = np.empty(len(row_starts) + 1, dtype=np.int32)
+    offs[:-1] = row_starts
+    offs[-1] = len(buf) if total is None else total
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), len(row_starts),
+        [None, pa.py_buffer(offs), pa.py_buffer(np.ascontiguousarray(buf))],
+    )
 
 
-def encode_grouped_blocked(
-    values: np.ndarray,
-    group_starts: np.ndarray,
-    block_size: int,
-    delta: bool,
-) -> tuple[list[bytes], list[list[int]]]:
-    """encode_grouped with per-block delta restarts AND per-group byte
-    offsets of each block start (relative to the group's buffer).
+def list_array(values: np.ndarray, counts: np.ndarray, value_type):
+    """Arrow list column: row i holds the next counts[i] entries of values."""
+    import pyarrow as pa
 
-    Returns (bufs, offs): offs[g][b] is the byte offset of block b inside
-    bufs[g] — the lazy-decode seek table. The serving path slices
-    bufs[g][offs[b]:offs[b+1]] and decodes ONE block without touching the
-    rest (block-max WAND skips whole blocks without decoding them).
-    """
-    v = np.asarray(values, dtype=np.uint64)
-    n_groups = len(group_starts)
-    if v.size == 0:
-        return [b""] * n_groups, [[] for _ in range(n_groups)]
-    gs = np.asarray(group_starts, dtype=np.int64)
-    bstarts = block_starts_for_groups(gs, v.size, block_size)
-    if delta:
-        v = delta_encode_grouped(v, bstarts)
-    buf, nbytes = _varbyte_encode_arr(v)
-    value_byte_starts = np.concatenate([[0], np.cumsum(nbytes)])
-    gb = value_byte_starts[gs]
-    ge = np.concatenate([gb[1:], [value_byte_starts[-1]]])
-    raw = buf.tobytes()
-    bufs = [raw[int(s):int(e)] for s, e in zip(gb, ge)]
-    # block byte offsets, group-relative
-    block_abs = value_byte_starts[bstarts]
-    group_of_block = np.searchsorted(gs, bstarts, side="right") - 1
-    rel = block_abs - gb[group_of_block]
-    offs: list[list[int]] = [[] for _ in range(n_groups)]
-    for g, o in zip(group_of_block.tolist(), rel.tolist()):
-        offs[g].append(int(o))
-    return bufs, offs
+    offs = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offs[1:])
+    return pa.ListArray.from_arrays(pa.array(offs), pa.array(values, type=value_type))
 
 
 def decode_ids_blocked(buf: bytes, block_size: int) -> np.ndarray:
     """Full decode of a block-restart delta buffer: varbyte -> segmented
-    cumsum (each block's first value is absolute). Vectorized: global
-    cumsum minus the running total at each block start."""
+    cumsum (each block's first value is absolute)."""
     v = varbyte_decode(buf)
-    n = v.size
-    if n == 0:
-        return v
-    c = np.cumsum(v, dtype=np.uint64)
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    cpad = np.concatenate([np.zeros(1, dtype=np.uint64), c])
-    base = cpad[starts]  # sum of gaps before each block
-    reps = np.minimum(starts + block_size, n) - starts
-    return c - np.repeat(base, reps)
+    return restart_cumsum(v, np.arange(0, v.size, block_size, dtype=np.int64))
 
 
 def decode_block(buf: bytes, offs: np.ndarray, b: int, delta: bool) -> np.ndarray:

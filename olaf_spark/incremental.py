@@ -17,10 +17,15 @@ model (same move Olaf itself makes with cache/store_cached, README.md:260-272):
                              df = sum per-part df) — so results are
                              rank- AND score-identical to a clean rebuild
                              over the union corpus (tests/test_incremental.py)
-  compact_index           -> one Spark job folds main + deltas into a single
-                             new index (k-way merge per term, block-max
-                             metadata recomputed with group stats); tombstoned
-                             postings are physically dropped
+  compact_index           -> one Spark job per tb range folds main + deltas
+                             into a single new index with the build merge's
+                             mapInArrow kernel (indexer.make_postings_kernel:
+                             a per-term doc sort over the batch, block-max
+                             metadata recomputed with group stats);
+                             tombstoned postings are physically dropped. The
+                             doc-range shuffle key (first_doc_col) is a JVM
+                             expression, so the range sampling and map
+                             stages run no Python
 
 Scoring semantics under deletes match the base engine (wand.py): tombstones
 filter postings out of results but df/N/avgdl stay as stored at append time —
@@ -39,25 +44,19 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import (
-    block_maxes,
-    decode_ids_blocked,
-    encode_grouped_blocked,
-    varbyte_decode,
-)
+from olaf_spark.codec import decode_ids_blocked, varbyte_decode
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
     POSTINGS_SCHEMA,
     Index,
-    _iter_term_chunks,
     build_index,
+    make_postings_kernel,
+    read_packed,
     shard_from_id_col,
-    sorted_tombstone_arr,
     term_id_py,
     tombstone_keep_mask,
 )
@@ -465,145 +464,24 @@ class IndexGroup:
         return hits
 
 
-def _make_compact_fn(n_docs: int, avgdl: float, cfg: EngineConfig, tombstones: set[int]):
-    k1, b, block_size = cfg.k1, cfg.b, cfg.block_size
-    ts_arr = sorted_tombstone_arr(tombstones)
-
-    def _compact_stream(pdf_iter):
-        """One range-partitioned slice of posting rows -> merged chunk rows.
-
-        Parts overlap in doc_id range, so unlike the build merge
-        (bucket-disjoint concat) this is a true k-way merge — decode,
-        argsort by doc_id, re-encode. Doc-range parallel: the shuffle
-        range-partitions on (tb, term_id, first_doc), so a head term's rows
-        may SPLIT across tasks — each task merges only the rows it received
-        and no task ever materializes a whole 10^12-scale term. Output
-        chunks of one term are then doc-DISJOINT but not globally
-        doc-ordered across tasks; every scorer only needs each chunk
-        internally sorted + each posting in exactly one chunk (doc_ids are
-        unique across parts), both of which hold. df arrives precomputed on
-        every row (df_full, the per-part-df pre-agg sum), so idf and block
-        maxes are exact regardless of task boundaries.
-
-        Streams complete term groups via _iter_term_chunks — resident
-        memory is O(arrow batch + one term's slice), never the partition.
-        """
-        for pdf in _iter_term_chunks(pdf_iter):
-            out = _compact_chunk(pdf)
-            if out is not None:
-                yield out
-
-    def _compact_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        df_fulls = pdf["df_full"].to_numpy(dtype=np.int64)
-        id_bufs = pdf["doc_ids_bin"].to_numpy()
-        tf_bufs = pdf["tfs_bin"].to_numpy()
-        dl_bufs = pdf["doc_lens_bin"].to_numpy()
-        row_new = np.empty(len(pdf), dtype=bool)
-        row_new[0] = True
-        row_new[1:] = terms[1:] != terms[:-1]
-        row_starts = np.flatnonzero(row_new)
-        row_ends = np.append(row_starts[1:], len(pdf))
-
-        cap = max(block_size, (cfg.max_row_postings // block_size) * block_size)
-        out_terms, dfs, chunks, group_starts = [], [], [], []
-        all_ids, all_tfs, all_dls = [], [], []
-        blk_lasts, blk_maxes = [], []
-        pos = 0
-        for s, e in zip(row_starts, row_ends):
-            ids_p, tfs_p, dls_p = [], [], []
-            for i in range(s, e):
-                ids_p.append(decode_ids_blocked(bytes(id_bufs[i]), block_size).astype(np.int64))
-                tfs_p.append(varbyte_decode(bytes(tf_bufs[i])))
-                dls_p.append(varbyte_decode(bytes(dl_bufs[i])))
-            ids = np.concatenate(ids_p)
-            tfs = np.concatenate(tfs_p)
-            dls = np.concatenate(dls_p)
-            order = np.argsort(ids, kind="stable")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            if ts_arr is not None:
-                keep = tombstone_keep_mask(ids, ts_arr)
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if ids.size == 0:
-                continue
-            # df/N/avgdl carried from the group's stored stats (NOT shrunk by
-            # tombstones) so post-compaction scores equal pre-compaction ones
-            df = int(df_fulls[s])
-            w = idf_fn(n_docs, df)
-            for ci, c0 in enumerate(range(0, int(ids.size), cap)):
-                c1 = min(c0 + cap, int(ids.size))
-                c_ids, c_tfs, c_dls = ids[c0:c1], tfs[c0:c1], dls[c0:c1]
-                lasts, bmax = block_maxes(
-                    c_ids.astype(np.uint64), c_tfs.astype(np.float64),
-                    c_dls.astype(np.float64), w, k1, b, avgdl, block_size,
-                )
-                out_terms.append(terms[s])
-                dfs.append(df)
-                chunks.append(ci)
-                group_starts.append(pos)
-                pos += c_ids.size
-                all_ids.append(c_ids.astype(np.uint64))
-                all_tfs.append(c_tfs)
-                all_dls.append(c_dls)
-                blk_lasts.append(lasts.tolist())
-                blk_maxes.append(bmax.tolist())
-
-        if not out_terms:
-            return None  # every posting in this slice tombstoned away
-        gs = np.asarray(group_starts, dtype=np.int64)
-        id_bin, id_offs = encode_grouped_blocked(
-            np.concatenate(all_ids), gs, block_size, delta=True
-        )
-        tf_bin, tf_offs = encode_grouped_blocked(
-            np.concatenate(all_tfs), gs, block_size, delta=False
-        )
-        dl_bin, dl_offs = encode_grouped_blocked(
-            np.concatenate(all_dls), gs, block_size, delta=False
-        )
-        return pd.DataFrame(
-            {
-                "term_id": np.asarray(out_terms, dtype=np.int64),
-                "df": np.asarray(dfs, dtype=np.int64),
-                "chunk": np.asarray(chunks, dtype=np.int32),
-                "doc_ids_bin": id_bin,
-                "tfs_bin": tf_bin,
-                "doc_lens_bin": dl_bin,
-                "block_lasts": blk_lasts,
-                "block_maxes": blk_maxes,
-                "id_offs": id_offs,
-                "tf_offs": tf_offs,
-                "dl_offs": dl_offs,
-            }
-        )
-
-    return _compact_stream
-
-
-def _first_doc_udf():
-    """Pandas UDF: absolute first doc_id of a packed posting row (the first
-    LEB128 value of doc_ids_bin — delta encoding keeps it absolute). Only
-    the leading <=10 bytes of each buffer are touched; this is the
-    compaction shuffle's doc-range key, O(rows) not O(postings)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def first_doc(bufs: pd.Series) -> pd.Series:
-        out = np.zeros(len(bufs), dtype=np.int64)
-        for i, buf in enumerate(bufs):
-            if buf:
-                v, shift = 0, 0
-                for byte in bytes(buf):
-                    v |= (byte & 0x7F) << shift
-                    if not (byte & 0x80):
-                        break
-                    shift += 7
-                # doc_ids travel as uint64; reinterpret as int64 — any
-                # deterministic total order works for SPLITTING a term's
-                # rows (chunks need not be globally doc-ordered)
-                out[i] = np.uint64(v & 0xFFFFFFFFFFFFFFFF).astype(np.int64)
-        return pd.Series(out)
-
-    return first_doc
+def first_doc_col(bin_col: str = "doc_ids_bin"):
+    """Absolute first doc_id of a packed posting row, as a JVM expression:
+    the first LEB128 value of the doc-id buffer (delta encoding keeps it
+    absolute), folded over at most its leading 10 bytes — the compaction
+    shuffle's doc-range key, O(rows) not O(postings), with no Python
+    worker in the sampling or map stage. The uint64 wraps to int64 the way
+    the stored ids do; any deterministic total order works for SPLITTING a
+    term's rows (chunks need not be globally doc-ordered)."""
+    byte = f"CAST(conv(hex(substring({bin_col}, i, 1)), 16, 10) AS BIGINT)"
+    return F.expr(
+        f"CASE WHEN length({bin_col}) = 0 THEN 0L ELSE aggregate("
+        f"sequence(1, least(length({bin_col}), 10)), "
+        "named_struct('v', 0L, 'more', true), "
+        "(acc, i) -> named_struct("
+        f"'v', IF(acc.more, acc.v | shiftleft({byte} & 127L, 7 * (i - 1)), acc.v), "
+        f"'more', acc.more AND ({byte} & 128L) != 0L), "
+        "acc -> acc.v) END"
+    )
 
 
 def _positions_fold_done(out_dir: str) -> bool:
@@ -781,7 +659,9 @@ def compact_index(
     all_rows = all_rows.withColumn(
         "tb", shard_from_id_col(F.col("term_id"), cfg.n_segments)
     )
-    compact_fn = _make_compact_fn(group.n_docs, group.avgdl, cfg, tombstones)
+    compact_fn = make_postings_kernel(
+        group.n_docs, group.avgdl, cfg, tombstones, compact=True
+    )
     if n_merge_tasks is None:
         from olaf_spark.indexer import dir_bytes, merge_task_count
 
@@ -810,10 +690,10 @@ def compact_index(
         merged = (
             g_rows.drop("tb").join(df_tbl, "term_id")
             .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
-            .withColumn("first_doc", _first_doc_udf()(F.col("doc_ids_bin")))
+            .withColumn("first_doc", first_doc_col())
             .repartitionByRange(n_merge_tasks, "tb", "term_id", "first_doc")
             .sortWithinPartitions("term_id", "first_doc")
-            .mapInPandas(compact_fn, POSTINGS_SCHEMA)
+            .mapInArrow(compact_fn, POSTINGS_SCHEMA)
             .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
         )
         stage_dir = os.path.join(staging_root, f"group_{g:04d}")
@@ -948,7 +828,7 @@ def compact_index(
 
     # chunk ordinals are task-local (a split term emits chunk 0 in several
     # tasks), so count terms/postings via a distinct-term agg, not chunk==0
-    pp = spark.read.parquet(post_dir)
+    pp = read_packed(spark, post_dir)
     per_term = pp.groupBy("term_id").agg(F.min("df").alias("df"))
     trow = per_term.agg(
         F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings")

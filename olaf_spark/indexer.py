@@ -8,15 +8,19 @@ single sorted LMDB store (reduce). Here the same shape, Spark-first:
   stage 1 (segments): tokenize -> (term, doc_id, tf, doc_len)
       -> bucket by doc_id RANGE  (so per-(term,bucket) runs are sorted AND
          disjoint — merging is concatenation, not a k-way merge)
-      -> repartition(bucket, term) + sortWithinPartitions + mapInPandas
-         single-pass vectorized pack (numpy delta+varbyte, encode_grouped)
+      -> repartition(bucket, term) + sortWithinPartitions + mapInArrow
+         single-pass vectorized pack (numpy delta+varbyte over whole Arrow
+         columns, _make_pack_stage1)
       -> parquet append, partitioned by bucket, one lineage row per bucket
 
-  stage 2 (merge): read segments -> repartition by term-hash shard (tb)
-      + sortWithinPartitions(term, bucket) + mapInPandas streaming merge
-      (concat runs in bucket order, re-encode once, block-max metadata)
+  stage 2 (merge): read segments (given schema: no inference job) + the
+      per-term df pre-agg -> repartition by term-hash shard (tb)
+      + sortWithinPartitions(term, bucket) + mapInArrow streaming merge
+      (make_postings_kernel: concat runs in bucket order, re-encode once,
+      block-max metadata; the same kernel folds compaction)
       -> global postings parquet, hive-partitioned by tb, term-sorted
-         within each shard (serving prunes to ~|q| directories)
+         within each shard (serving prunes to ~|q| directories); the
+         term count rides the write as an Observation, not an extra job
 
 Skew (north_rule / SURVEY §7.5-2): a head term's postings arrive as many
 bucket-runs built in parallel — no single task ever holds more than one
@@ -46,16 +50,17 @@ import shutil
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olaf_spark.codec import (
-    block_maxes,
-    delta_decode,
-    encode_grouped,
-    encode_grouped_blocked,
-    varbyte_decode,
+    binary_array,
+    binary_values,
+    encode_values,
+    list_array,
+    restart_cumsum,
+    seg_starts,
+    strided_starts,
 )
 from olaf_spark.config import EngineConfig
 from olaf_spark.scorer import idf
@@ -69,12 +74,22 @@ SEGMENT_SCHEMA = (
 # a RESTART (absolute value) at every block boundary, and *_offs hold each
 # block's byte offset inside its buffer — so the serving path can decode ONE
 # block without touching the rest (lazy block decode for block-max pruning).
+SEGMENT_COLUMNS = [f.split()[0] for f in SEGMENT_SCHEMA.split(", ")]
+
 POSTINGS_SCHEMA = (
     "term_id long, df long, chunk int, "
     "doc_ids_bin binary, tfs_bin binary, doc_lens_bin binary, "
     "block_lasts array<long>, block_maxes array<double>, "
     "id_offs array<long>, tf_offs array<long>, dl_offs array<long>"
 )
+POSTINGS_COLUMNS = [f.split()[0] for f in POSTINGS_SCHEMA.split(", ")]
+
+
+def read_packed(spark: SparkSession, path: str, schema: str = POSTINGS_SCHEMA) -> DataFrame:
+    """A tb-partitioned packed table (postings, positions or bigrams) read
+    with its schema given: inferring it is a footer-reading Spark job on
+    every read."""
+    return spark.read.schema(schema + ", tb int").parquet(path)
 
 
 def term_id_py(term: str) -> int:
@@ -149,9 +164,16 @@ def cluster_for_write(
     4.2 -> 1.6 s at 50k docs, and fewer segment files also means fewer
     parquet footers on every serving read. Salted by term_id so one
     partition value still spreads over multiple tasks when
-    n_tasks > n_parts (tasks stay size-derived at cluster scale)."""
+    n_tasks > n_parts (tasks stay size-derived at cluster scale).
+
+    Rows are then sorted on (part_col, term_id) inside each task: the
+    writer's own partition sort is satisfied by that prefix, and every file
+    comes out term-sorted, so row-group term_id stats stay tight for the
+    serving reads' pushdown."""
     k = max(1, n_tasks // max(1, n_parts))
-    return df.repartition(n_tasks, F.col(part_col), F.pmod(F.col(salt_col), F.lit(k)))
+    return df.repartition(
+        n_tasks, F.col(part_col), F.pmod(F.col(salt_col), F.lit(k))
+    ).sortWithinPartitions(part_col, "term_id")
 
 
 def dir_bytes(*dirs: str) -> int:
@@ -241,202 +263,240 @@ def bucket_expr(id_col, lo: int, width: int, n_buckets: int):
     )
 
 
-def _iter_term_chunks(pdf_iter):
+def iter_term_groups(batches):
     """Regroup an Arrow batch stream (rows sorted by term_id within the
-    partition) into frames of COMPLETE term groups.
+    partition) into record batches of COMPLETE term groups.
 
-    Concatenating the whole partition (`pd.concat(list(pdf_iter))`) before
-    the group loop forfeits mapInPandas's streaming iterator — task memory
-    becomes the full partition. This generator instead flushes closed term
-    groups as each batch arrives and carries only the still-open tail term
-    forward, so resident memory is O(arrow batch + largest single term's
-    rows in this task) — the latter already bounded by doc-range splitting
-    (stage-1 buckets / the merge's (tb, term, bucket|first_doc) range key).
-    A mega-term spanning many batches accumulates as a LIST of frames and
-    concatenates once at flush (no quadratic re-concat churn).
+    Closed groups are flushed as each batch arrives and only the
+    still-open tail term is carried forward, so resident memory is
+    O(arrow batch + largest single term's rows in this task) — the latter
+    already bounded by doc-range splitting (stage-1 buckets / the merge's
+    (tb, term, bucket|first_doc) range key). A mega-term spanning many
+    batches accumulates as a list of slices and concatenates once.
     """
-    buf: list[pd.DataFrame] = []
-    for pdf in pdf_iter:
-        if not len(pdf):
+    import pyarrow as pa
+
+    def concat(parts):
+        if len(parts) == 1:
+            return parts[0]
+        return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+
+    carry: list = []
+    for rb in batches:
+        if not rb.num_rows:
             continue
-        terms = pdf["term_id"].to_numpy()
+        terms = rb.column("term_id").to_numpy(zero_copy_only=False)
         # rows are term_id-sorted, so searchsorted finds where the (possibly
         # still-open) LAST term begins; everything before it is closed
         cut = int(np.searchsorted(terms, terms[-1], side="left"))
-        if cut > 0:
-            closed = pdf.iloc[:cut]
-            if buf:
-                buf.append(closed)
-                yield pd.concat(buf, ignore_index=True)
-                buf = []
-            else:
-                yield closed.reset_index(drop=True)
-        buf.append(pdf.iloc[cut:])
-    if buf:
-        tail = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0].reset_index(drop=True)
-        if len(tail):
-            yield tail
+        if cut:
+            yield concat(carry + [rb.slice(0, cut)])
+            carry = []
+        carry.append(rb.slice(cut))
+    if carry:
+        yield concat(carry)
+
+
+def _col(rb, name: str, dtype) -> np.ndarray:
+    return rb.column(name).to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+
+
+def _run_starts(*keys: np.ndarray) -> np.ndarray:
+    """Mask of the first row of every run of equal keys (rows sorted on
+    them): row 0, and each row where any key differs from the row before."""
+    new = np.zeros(keys[0].size, dtype=bool)
+    new[:1] = True
+    for k in keys:
+        new[1:] |= k[1:] != k[:-1]
+    return new
 
 
 def _make_pack_stage1(lo: int, width: int, n_buckets: int):
-    """One sorted partition of occurrence rows (term_id, doc_id, doc_len)
-    -> one packed segment row per (term, bucket) group, in ONE vectorized
-    pass: tf = run length of equal (term_id, doc_id).
+    """mapInArrow fn: one sorted partition of occurrence rows (term_id,
+    doc_id, doc_len) -> one packed segment row per (term, bucket) group,
+    tf = run length of equal (term_id, doc_id).
 
     The bucket column never rides the shuffle: it is a deterministic
     monotone function of doc_id, used as a partitioning EXPRESSION and
     recomputed here in numpy (bucket_of_np, bit-identical float64).
     Sorting by (term_id, doc_id) suffices — bucket is monotone in doc_id,
-    so (term, bucket) runs are contiguous. A groupBy.applyInPandas would
-    invoke Python once per group (hundreds of thousands of 1-row pandas
-    frames — measured 4-7 minutes at 40k docs); this processes complete
-    term-group chunks with numpy group-boundary detection instead —
-    streamed through _iter_term_chunks, never the whole partition at once.
+    so (term, bucket) runs are contiguous. Group boundaries are numpy
+    flags over each batch of complete term groups (iter_term_groups) and
+    the three packed columns are encoded in one pass each, straight into
+    Arrow buffers.
     """
+    import pyarrow as pa
 
-    def _pack_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        ids_all = pdf["doc_id"].to_numpy(dtype=np.int64)
-        dls_all = pdf["doc_len"].to_numpy(dtype=np.uint64)
-        buckets = bucket_of_np(ids_all, lo, width, n_buckets)
+    def _pack(batches):
+        for rb in iter_term_groups(batches):
+            n = rb.num_rows
+            terms = _col(rb, "term_id", np.int64)
+            ids_all = _col(rb, "doc_id", np.int64)
+            buckets = bucket_of_np(ids_all, lo, width, n_buckets)
 
-        g_new = np.empty(n, dtype=bool)
-        g_new[0] = True
-        g_new[1:] = (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1])
-        d_new = g_new.copy()
-        d_new[1:] |= ids_all[1:] != ids_all[:-1]
-
-        d_starts = np.flatnonzero(d_new)                 # one per (g, doc) run
-        tfs = np.diff(np.append(d_starts, n)).astype(np.uint64)
-        ids = ids_all[d_starts].astype(np.uint64)
-        dls = dls_all[d_starts]
-
-        g_starts_rows = np.flatnonzero(g_new)            # in occurrence space
-        # every group start IS a doc-run start (g_new implies d_new), so this
-        # searchsorted lands exactly on the runs' indices
-        g_starts = np.searchsorted(d_starts, g_starts_rows)
-        n_docs = np.diff(np.append(g_starts, d_starts.size))
-        # occurrences per group == sum of tfs per group (feeds global avgdl
-        # from a cheap segment scan, not a second corpus tokenize pass)
-        sum_tf = np.diff(np.append(g_starts_rows, n))
-
-        return pd.DataFrame(
-            {
-                "term_id": terms[g_starts_rows],
-                "bucket": buckets[g_starts_rows],
-                "n_docs": n_docs.astype("int64"),
-                "sum_tf": sum_tf.astype("int64"),
-                "doc_ids_bin": encode_grouped(ids, g_starts, delta=True),
-                "tfs_bin": encode_grouped(tfs, g_starts, delta=False),
-                "doc_lens_bin": encode_grouped(dls, g_starts, delta=False),
-            }
-        )
-
-    def _pack(pdf_iter):
-        for pdf in _iter_term_chunks(pdf_iter):
-            yield _pack_chunk(pdf)
+            g_new = _run_starts(terms, buckets)
+            d_starts = np.flatnonzero(g_new | _run_starts(ids_all))  # (g, doc) runs
+            tfs = np.diff(np.append(d_starts, n))
+            g_rows = np.flatnonzero(g_new)                   # in occurrence space
+            # every group start IS a doc-run start, so this searchsorted
+            # lands exactly on the runs' indices
+            g_starts = np.searchsorted(d_starts, g_rows)
+            cols = [
+                pa.array(terms[g_rows]),
+                pa.array(buckets[g_rows]),
+                pa.array(np.diff(np.append(g_starts, d_starts.size))),
+                # occurrences per group == sum of tfs per group (feeds global
+                # avgdl from a cheap segment scan, not a second tokenize pass)
+                pa.array(np.diff(np.append(g_rows, n))),
+            ]
+            for vals, restarts in (
+                (ids_all[d_starts], g_starts),
+                (tfs, None),
+                (_col(rb, "doc_len", np.int64)[d_starts], None),
+            ):
+                buf, vstart = encode_values(vals.astype(np.uint64), restarts)
+                cols.append(binary_array(buf, vstart[g_starts]))
+            yield pa.RecordBatch.from_arrays(cols, names=SEGMENT_COLUMNS)
 
     return _pack
 
 
-def _make_merge_fn(n_docs: int, avgdl: float, cfg: EngineConfig):
-    k1, b, block_size = cfg.k1, cfg.b, cfg.block_size
-    max_row_postings = cfg.max_row_postings
+def _encode_postings(
+    terms: np.ndarray,
+    dfs: np.ndarray,
+    tstarts: np.ndarray,
+    ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    n_docs: int,
+    avgdl: float,
+    cfg: EngineConfig,
+):
+    """Posting rows (POSTINGS_SCHEMA) for term groups laid out back to back:
+    term t owns postings [tstarts[t], tstarts[t + 1]) of ids/tfs/dls, each
+    doc-sorted, and scores with df dfs[t].
 
-    def _merge_stream(pdf_iter) -> "pd.DataFrame":
-        """One sorted partition of segment rows -> chunked global posting
-        rows. Runs are sorted by doc_id within a bucket and buckets are
-        disjoint doc_id ranges, so concatenation in (term, bucket) order IS
-        the merge (Olaf's store_cached bulk load / sorted B+tree insert).
+    A term longer than the row cap splits into chunks aligned to
+    block_size, so block metadata stays chunk-local (config docstring: no
+    task/read depends on one term fitting one row at 10^12 docs); blocks
+    therefore start at every block_size-th posting of a term. Block maxima
+    are one np.maximum.reduceat over the scores, and every packed column is
+    one encode over all terms, assembled into Arrow buffers from offsets.
+    """
+    import pyarrow as pa
 
-        Doc-range parallel: the shuffle range-partitions on (tb, term_id,
-        bucket), so a head term's runs may SPLIT across tasks — each task
-        merges its contiguous bucket range only, and no task ever holds a
-        whole 10^12-scale term. df arrives precomputed on every run row
-        (df_full, an exact sum of run n_docs done as a cheap pre-agg), so
-        idf and block maxes are exact regardless of which task packs which
-        range. `chunk` is a task-local ordinal (rows of one term are
-        doc-range disjoint; nothing depends on chunk numbering).
+    bs = cfg.block_size
+    cap = max(bs, (cfg.max_row_postings // bs) * bs)
+    tend = np.append(tstarts[1:], ids.size)
+    tcount = tend - tstarts
 
-        Streams complete term groups via _iter_term_chunks — resident
-        memory is O(arrow batch + one term's runs), never the partition.
-        """
-        for pdf in _iter_term_chunks(pdf_iter):
-            yield _merge_chunk(pdf)
+    # idf per DISTINCT df through the scalar scorer formula (bit-identical
+    # to serving's idf); a Zipf vocabulary has few distinct dfs
+    uniq, inv = np.unique(dfs, return_inverse=True)
+    w = np.asarray([idf(n_docs, int(d)) for d in uniq], dtype=np.float64)[inv]
+    tf_f = tfs.astype(np.float64)
+    dl_f = dls.astype(np.float64)
+    k1, b = cfg.k1, cfg.b
+    # same association order as codec.block_maxes / oracle / scorer, so each
+    # block's bound is bit-identical and >= every true score in it
+    scores = np.repeat(w, tcount) * (
+        tf_f * (k1 + 1.0) / (tf_f + k1 * (1.0 - b + b * dl_f / avgdl))
+    )
+    bstarts, bterm = strided_starts(tstarts, tcount, bs)
+    bmax = np.maximum.reduceat(scores, bstarts)
+    blasts = ids[np.minimum(bstarts + bs, tend[bterm]) - 1].astype(np.int64)
 
-    def _merge_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        df_fulls = pdf["df_full"].to_numpy(dtype=np.int64)
-        # plain object arrays: .iloc in the hot loop costs ~10us per access,
-        # which at millions of segment rows turned the merge superlinear
-        id_bufs = pdf["doc_ids_bin"].to_numpy()
-        tf_bufs = pdf["tfs_bin"].to_numpy()
-        dl_bufs = pdf["doc_lens_bin"].to_numpy()
-        row_new = np.empty(len(pdf), dtype=bool)
-        row_new[0] = True
-        row_new[1:] = terms[1:] != terms[:-1]
-        row_starts = np.flatnonzero(row_new)
-        row_ends = np.append(row_starts[1:], len(pdf))
+    cstarts, cterm = strided_starts(tstarts, tcount, cap)
+    clen = np.minimum(cap, tend[cterm] - cstarts)
+    nblk = (clen + bs - 1) // bs
+    cblk = np.repeat(np.arange(cstarts.size), nblk)   # chunk of each block
 
-        # head-term row cap, aligned to block_size so block metadata stays
-        # chunk-local (config docstring: no task/read depends on one term
-        # fitting one row at 10^12 docs)
-        cap = max(block_size, (max_row_postings // block_size) * block_size)
+    cols = [
+        pa.array(terms[cterm]),
+        pa.array(dfs[cterm]),          # FULL df on every chunk: idf unchanged
+        pa.array(((cstarts - tstarts[cterm]) // cap).astype(np.int32)),
+    ]
+    offs = []
+    for vals, restarts in ((ids, bstarts), (tfs, None), (dls, None)):
+        buf, vstart = encode_values(vals, restarts)
+        row0 = vstart[cstarts]
+        cols.append(binary_array(buf, row0, vstart[-1]))
+        # each block's byte offset inside its chunk's buffer: the lazy-decode
+        # seek table (serving decodes ONE block without touching the rest)
+        offs.append(list_array(vstart[bstarts] - row0[cblk], nblk, pa.int64()))
+    cols.append(list_array(blasts, nblk, pa.int64()))
+    cols.append(list_array(bmax, nblk, pa.float64()))
+    return pa.RecordBatch.from_arrays(cols + offs, names=POSTINGS_COLUMNS)
 
-        all_ids, all_tfs, all_dls = [], [], []
-        out_terms, dfs, chunks, group_starts = [], [], [], []
-        blk_lasts, blk_maxes = [], []
-        pos = 0
-        for s, e in zip(row_starts, row_ends):
-            ids = np.concatenate(
-                [delta_decode(varbyte_decode(id_bufs[i])) for i in range(s, e)]
-            )
-            tfs = np.concatenate([varbyte_decode(tf_bufs[i]) for i in range(s, e)])
-            dls = np.concatenate([varbyte_decode(dl_bufs[i]) for i in range(s, e)])
-            df_full = int(df_fulls[s])
-            w = idf(n_docs, df_full)
-            local_n = int(ids.size)  # this task's doc-range portion, <= df_full
-            for ci, c0 in enumerate(range(0, local_n, cap)):
-                c1 = min(c0 + cap, local_n)
-                c_ids, c_tfs, c_dls = ids[c0:c1], tfs[c0:c1], dls[c0:c1]
-                lasts, bmax = block_maxes(
-                    c_ids, c_tfs.astype(np.float64), c_dls.astype(np.float64),
-                    w, k1, b, avgdl, block_size,
-                )
-                out_terms.append(terms[s])
-                dfs.append(df_full)  # FULL df on every chunk: idf unchanged
-                chunks.append(ci)
-                group_starts.append(pos)
-                pos += c_ids.size
-                all_ids.append(c_ids)
-                all_tfs.append(c_tfs)
-                all_dls.append(c_dls)
-                blk_lasts.append(lasts.tolist())
-                blk_maxes.append(bmax.tolist())
 
-        cat = np.concatenate
-        gs = np.asarray(group_starts, dtype=np.int64)
-        id_bin, id_offs = encode_grouped_blocked(cat(all_ids), gs, block_size, delta=True)
-        tf_bin, tf_offs = encode_grouped_blocked(cat(all_tfs), gs, block_size, delta=False)
-        dl_bin, dl_offs = encode_grouped_blocked(cat(all_dls), gs, block_size, delta=False)
-        return pd.DataFrame(
-            {
-                "term_id": np.asarray(out_terms, dtype=np.int64),
-                "df": np.asarray(dfs, dtype=np.int64),
-                "chunk": np.asarray(chunks, dtype=np.int32),
-                "doc_ids_bin": id_bin,
-                "tfs_bin": tf_bin,
-                "doc_lens_bin": dl_bin,
-                "block_lasts": blk_lasts,
-                "block_maxes": blk_maxes,
-                "id_offs": id_offs,
-                "tf_offs": tf_offs,
-                "dl_offs": dl_offs,
-            }
+def make_postings_kernel(
+    n_docs: int, avgdl: float, cfg: EngineConfig, tombstones=None, compact: bool = False
+):
+    """mapInArrow fn: one sorted partition of packed rows -> chunked global
+    posting rows. The build merge and compaction share it.
+
+    Build merge (compact=False): segment runs arrive sorted by (term,
+    bucket); runs are doc-sorted within a bucket and buckets are disjoint
+    doc_id ranges, so concatenation in that order IS the merge (Olaf's
+    store_cached bulk load / sorted B+tree insert).
+
+    Compaction (compact=True): posting rows of every part arrive sorted by
+    (term, first_doc); parts overlap in doc range, so the kernel adds the
+    per-term doc sort (one lexsort over the whole batch) and drops
+    tombstoned postings — a term left with none emits no row. doc_ids_bin
+    restarts its gaps at every block of each input row.
+
+    Doc-range parallel: the shuffle range-partitions on (tb, term_id,
+    bucket|first_doc), so a head term's rows may SPLIT across tasks — each
+    task merges only its contiguous range and no task ever holds a whole
+    10^12-scale term. df arrives precomputed on every row (df_full, a
+    pre-agg joined on), so idf and block maxes are exact regardless of
+    which task packs which range. `chunk` is a task-local ordinal: output
+    chunks of one term are doc-disjoint, each internally sorted, which is
+    all any scorer needs. df/N/avgdl are the group's stored stats (NOT
+    shrunk by tombstones), so post-compaction scores equal pre-compaction
+    ones.
+
+    Complete term groups stream through iter_term_groups; each batch of
+    them decodes every binary column in one pass — resident memory is
+    O(arrow batch + one term's rows), never the partition.
+    """
+    ts_arr = sorted_tombstone_arr(tombstones)
+    bs = cfg.block_size
+
+    def _batch(rb):
+        terms_r = _col(rb, "term_id", np.int64)
+        df_r = _col(rb, "df_full", np.int64)
+        gaps, counts = binary_values(rb.column("doc_ids_bin"))
+        rstarts = seg_starts(counts)
+        restarts = strided_starts(rstarts, counts, bs)[0] if compact else rstarts
+        ids = restart_cumsum(gaps, restarts)
+        tfs = binary_values(rb.column("tfs_bin"))[0]
+        dls = binary_values(rb.column("doc_lens_bin"))[0]
+
+        row_new = _run_starts(terms_r)
+        term_of = np.repeat(np.cumsum(row_new) - 1, counts)   # per posting
+        first_row = np.flatnonzero(row_new)
+        if compact:
+            order = np.lexsort((ids.astype(np.int64), term_of))
+            if ts_arr is not None:
+                order = order[tombstone_keep_mask(ids[order].astype(np.int64), ts_arr)]
+            if not order.size:
+                return None   # every posting in this slice tombstoned away
+            ids, tfs, dls, term_of = ids[order], tfs[order], dls[order], term_of[order]
+        tstarts = np.flatnonzero(_run_starts(term_of))
+        rows = first_row[term_of[tstarts]]
+        return _encode_postings(
+            terms_r[rows], df_r[rows], tstarts, ids, tfs, dls, n_docs, avgdl, cfg
         )
 
-    return _merge_stream
+    def _kernel(batches):
+        for rb in iter_term_groups(batches):
+            out = _batch(rb)
+            if out is not None:
+                yield out
+
+    return _kernel
 
 
 class Index:
@@ -499,7 +559,7 @@ class Index:
         return cls(index_dir, cfg, stats)
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.index_dir, "postings"))
+        return read_packed(spark, os.path.join(self.index_dir, "postings"))
 
     def lineage(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.index_dir, "lineage"))
@@ -637,11 +697,11 @@ def tombstone_keep_mask(ids: np.ndarray, ts_sorted: np.ndarray) -> np.ndarray:
     return ~hit
 
 
-_LINEAGE_SCHEMA_PD = {
-    "stage": "string", "partition_id": "int64", "input_rows": "int64",
-    "output_rows": "int64", "wall_s": "float64", "rows_per_s": "float64",
-    "bytes_out": "int64", "status": "string", "ts": "float64",
-}
+_LINEAGE_SCHEMA = (
+    ("stage", "string"), ("partition_id", "int64"), ("input_rows", "int64"),
+    ("output_rows", "int64"), ("wall_s", "float64"), ("rows_per_s", "float64"),
+    ("bytes_out", "int64"), ("status", "string"), ("ts", "float64"),
+)
 
 
 def _write_lineage(rows: list[dict], lin_dir: str) -> None:
@@ -661,13 +721,13 @@ def _write_lineage(rows: list[dict], lin_dir: str) -> None:
 
     mfs = get_metafs()
     mfs.ensure_dir(lin_dir)
-    pdf = pd.DataFrame(rows).astype(_LINEAGE_SCHEMA_PD)
+    schema = pa.schema([(name, pa.type_for_alias(t)) for name, t in _LINEAGE_SCHEMA])
     # write-then-commit: a crash mid-write leaves only a dot-prefixed tmp,
     # which pyarrow datasets and Spark's parquet reader both ignore — a
     # manifest either exists completely or not at all (commit-file pattern)
     final = os.path.join(lin_dir, f"lineage-{uuid.uuid4().hex}.parquet")
     tmp = mfs.tmp_path(final)
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
     mfs.publish_new(tmp, final)
 
 
@@ -754,17 +814,19 @@ def build_index(
     seg = (
         todo_pf.repartition(n_tasks, b_expr, F.col("term_id"))
         .sortWithinPartitions("term_id", "doc_id")
-        .mapInPandas(_make_pack_stage1(lo, bucket_width, n_buckets), SEGMENT_SCHEMA)
+        .mapInArrow(_make_pack_stage1(lo, bucket_width, n_buckets), SEGMENT_SCHEMA)
     )
     seg = cluster_for_write(seg, "bucket", n_tasks, n_buckets)
     seg.write.mode("append").partitionBy("bucket").parquet(seg_dir)
     seg_wall = time.time() - t0
 
     # lineage + global totals from ONE scan of the (packed, ~10x smaller)
-    # segment files — no separate total_tf job, no second corpus pass
+    # segment files — no separate total_tf job, no second corpus pass. The
+    # schema is given, not inferred: inference is a footer-reading job per
+    # read
+    segments = spark.read.schema(SEGMENT_SCHEMA).parquet(seg_dir)
     seg_stats = (
-        spark.read.parquet(seg_dir)
-        .groupBy("bucket")
+        segments.groupBy("bucket")
         .agg(
             F.count("*").alias("n_terms"),
             F.sum("n_docs").alias("n_postings"),
@@ -797,24 +859,15 @@ def build_index(
 
     # ---- stage 2: merge bucket-runs into global postings -------------------
     t0 = time.time()
-    merge_fn = _make_merge_fn(n_docs, avgdl, cfg)
-    segments = spark.read.parquet(seg_dir)
     from pyspark.sql import Observation
 
     # exact per-term df from run n_docs — a cheap pre-agg whose join onto
     # the runs lets the merge split a term ACROSS tasks (Catalyst broadcasts
-    # this table when small, shuffle-joins at 10^9-term scale).
-    df_tbl = segments.groupBy("term_id").agg(F.sum("n_docs").alias("df_full"))
-    # n_terms/n_postings via a separate tiny action over the (packed,
-    # already-aggregated) table — NOT an Observation attached below the range
-    # exchange: repartitionByRange's sampling pass re-executes the join
-    # subtree, so a CollectMetrics there sees every row twice whenever the
-    # join is not broadcast (sort-merge at 10^9-term scale) and stats.json
-    # n_terms/n_postings + merge lineage would inflate ~2x.
-    trow = df_tbl.agg(
-        F.count(F.lit(1)).alias("n_terms"), F.sum("df_full").alias("n_postings")
-    ).collect()[0]
-    term_totals = {"n_terms": int(trow["n_terms"]), "n_postings": int(trow["n_postings"] or 0)}
+    # this table when small, shuffle-joins at 10^9-term scale). first_bucket
+    # marks each term's first run, so the merge input counts terms exactly.
+    df_tbl = segments.groupBy("term_id").agg(
+        F.sum("n_docs").alias("df_full"), F.min("bucket").alias("first_bucket")
+    )
     # Shard by term-hash (tb): the output is hive-partitioned by tb so the
     # serving path prunes to ~|q| directories. The shuffle itself is
     # RANGE-partitioned on (tb, term_id, bucket) into n_merge_tasks:
@@ -828,42 +881,47 @@ def build_index(
     #     mega-term, only its contiguous bucket range (df arrives via the
     #     pre-agg, so scores don't depend on task boundaries).
     # honor an explicit caller value verbatim; the default is SIZE-derived
-    # (guide §2.2: partitions sized by bytes, not a constant): one merge
-    # task per ~32 MB of packed segment bytes — floor at the session's
-    # parallelism so small corpora still use every core, cap at 4096. The
-    # old constant 128 meant 4-row tasks at bench scale and would
-    # undersize thousand-node merges.
+    # (guide §2.2: partitions sized by bytes, not a constant).
     if n_merge_tasks is None:
         seg_bytes = sum(int(r["bytes_out"] or 0) for r in seg_stats)
         n_merge_tasks = merge_task_count(spark, seg_bytes)
+    # n_terms rides the merge write as an Observation ABOVE the range
+    # exchange, where each run row is seen once (n_postings is the runs'
+    # n_docs total, already in seg_stats). Below the exchange it would not
+    # be: repartitionByRange's sampling pass re-executes the join subtree,
+    # so a CollectMetrics there counts rows twice whenever the join is not
+    # broadcast. Byte stats ride the write the same way, after the merge.
+    in_obs, out_obs = Observation("merge_in"), Observation("post_stats")
     postings = (
         segments.join(df_tbl, "term_id")
         .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
         .repartitionByRange(n_merge_tasks, "tb", "term_id", "bucket")
+        .observe(
+            in_obs,
+            F.count(F.when(F.col("bucket") == F.col("first_bucket"), 1)).alias("n_terms"),
+        )
         .sortWithinPartitions("term_id", "bucket")
-        .mapInPandas(merge_fn, POSTINGS_SCHEMA)
+        .mapInArrow(make_postings_kernel(n_docs, avgdl, cfg), POSTINGS_SCHEMA)
         .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
-    )
-    # byte stats ride the write via the Observation API — no re-scan job
-    obs = Observation("post_stats")
-    postings = postings.observe(
-        obs,
-        F.sum(
-            F.length("doc_ids_bin") + F.length("tfs_bin") + F.length("doc_lens_bin")
-        ).alias("bytes"),
+        .observe(
+            out_obs,
+            F.sum(
+                F.length("doc_ids_bin") + F.length("tfs_bin") + F.length("doc_lens_bin")
+            ).alias("bytes"),
+        )
     )
     postings.write.mode("overwrite").partitionBy("tb").parquet(post_dir)
     merge_wall = time.time() - t0
-    post_stats = {**obs.get, **term_totals}
+    n_terms, n_bytes = int(in_obs.get["n_terms"]), int(out_obs.get["bytes"] or 0)
     _write_lineage(
         [
             dict(
                 stage="merge", partition_id=-1,
                 input_rows=total_postings_in,
-                output_rows=int(post_stats["n_terms"]),
+                output_rows=n_terms,
                 wall_s=merge_wall,
-                rows_per_s=(int(post_stats["n_postings"] or 0) / merge_wall if merge_wall > 0 else 0.0),
-                bytes_out=int(post_stats["bytes"] or 0), status="done", ts=time.time(),
+                rows_per_s=(total_postings_in / merge_wall if merge_wall > 0 else 0.0),
+                bytes_out=n_bytes, status="done", ts=time.time(),
             )
         ],
         lin_dir,
@@ -874,9 +932,9 @@ def build_index(
         n_docs=n_docs,
         avgdl=avgdl,
         total_tokens=total_tf,
-        n_terms=int(post_stats["n_terms"]),
-        n_postings=int(post_stats["n_postings"] or 0),
-        packed_bytes=int(post_stats["bytes"] or 0),
+        n_terms=n_terms,
+        n_postings=total_postings_in,
+        packed_bytes=n_bytes,
         n_buckets=n_buckets,
         bucket_width=bucket_width,
         build_wall_s=time.time() - t_start,

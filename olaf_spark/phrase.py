@@ -11,11 +11,13 @@ fingerprint sequence: term i must occur at position p+i of the SAME doc.
 Spark-first shape:
 
   build_positions   one wide shuffle (same doc-id-range bucketing as the
-                    main build) -> mapInPandas pack: per (term, bucket) row
+                    main build) -> mapInArrow pack: per (term, bucket) row
                     holds doc_ids (delta+varbyte), per-doc position counts
                     (varbyte), and per-doc delta-encoded positions (one
-                    buffer, restart at each doc boundary — encode_grouped's
-                    delta_starts) -> parquet hive-partitioned by tb.
+                    buffer, restart at each doc boundary) plus each doc's
+                    byte offset in it -> parquet hive-partitioned by tb.
+                    Pack and the compaction fold work on whole Arrow
+                    columns (one decode/encode per column per batch).
                     A SIDE index: the main postings format is untouched
                     (phrase support is additive, like Olaf keeping metadata
                     in a separate LMDB database, olaf_db.c:64-71).
@@ -53,13 +55,26 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olaf_spark.codec import delta_decode, encode_grouped, varbyte_decode
+from olaf_spark.codec import (
+    binary_array,
+    binary_bytes,
+    binary_values,
+    delta_decode,
+    encode_values,
+    list_array,
+    restart_cumsum,
+    seg_starts,
+    varbyte_decode,
+)
 from olaf_spark.config import EngineConfig
 from olaf_spark.indexer import (
-    _iter_term_chunks,
+    _col,
+    _run_starts,
     bucket_expr,
     bucket_of_np,
     in_expr_int,
+    iter_term_groups,
+    read_packed,
     shard_from_id_col,
     sorted_tombstone_arr,
     term_id_col,
@@ -73,6 +88,7 @@ POSITIONS_SCHEMA = (
     "doc_ids_bin binary, pos_counts_bin binary, pos_bin binary, "
     "pos_offs array<long>"
 )
+POSITIONS_COLUMNS = [f.split()[0] for f in POSITIONS_SCHEMA.split(", ")]
 
 #: positional layout version; 2 = per-doc byte offsets (lazy candidate
 #: decode); 3 = v2 + the doc-range bucket as an explicit column (the
@@ -85,80 +101,51 @@ POSITIONS_FORMAT_VERSION = 3
 _DEFAULT = EngineConfig()
 
 
-def _seg_cumsum(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Segmented cumsum: each segment's first value is absolute, the rest
-    are gaps (the decode twin of encode_grouped's delta_starts restarts)."""
-    if vals.size == 0:
-        return vals
-    cts = np.asarray(counts, dtype=np.int64)
-    c = np.cumsum(vals, dtype=np.uint64)
-    starts = np.concatenate([[0], np.cumsum(cts)[:-1]]).astype(np.int64)
-    cpad = np.concatenate([np.zeros(1, dtype=np.uint64), c])
-    base = cpad[starts]
-    return c - np.repeat(base, cts)
+def _position_rows(terms, buckets, g_docs, doc_ids, counts, pos_buf, doc_bytes):
+    """POSITIONS_SCHEMA rows for doc-sorted groups laid out back to back:
+    group g owns docs [g_docs[g], g_docs[g + 1]) of doc_ids/counts, and doc
+    d's position run is pos_buf[doc_bytes[d]:doc_bytes[d + 1]]. Each row's
+    pos_offs is its docs' byte offsets inside the row's pos_bin — the
+    lazy-decode seek table (phrase serving decodes ONLY candidate docs'
+    position runs)."""
+    import pyarrow as pa
+
+    n_docs = np.diff(np.append(g_docs, doc_ids.size))
+    row0 = doc_bytes[g_docs]
+    cols = [pa.array(terms), pa.array(buckets), pa.array(n_docs)]
+    for vals, restarts in ((doc_ids, g_docs), (counts, None)):
+        buf, vstart = encode_values(vals.astype(np.uint64), restarts)
+        cols.append(binary_array(buf, vstart[g_docs]))
+    cols.append(binary_array(pos_buf, row0))
+    cols.append(list_array(doc_bytes - np.repeat(row0, n_docs), n_docs, pa.int64()))
+    return pa.RecordBatch.from_arrays(cols, names=POSITIONS_COLUMNS)
 
 
 def _make_pack_positions(lo: int, width: int, n_buckets: int):
-    """Sorted (term_id, doc_id, pos) occurrence rows -> packed position rows
-    per (term, bucket) group — same single-pass numpy group detection as
-    the main build's _pack_stage1."""
-    import pandas as pd
+    """mapInArrow fn: sorted (term_id, doc_id, pos) occurrence rows ->
+    packed position rows per (term, bucket) group — the same single-pass
+    numpy group detection as the main build's _pack_stage1. Positions form
+    ONE buffer per group, gap-encoded with an ABSOLUTE restart at every doc
+    boundary, so each doc's run decodes on its own."""
 
-    def _pack_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        docs_ = pdf["doc_id"].to_numpy(dtype=np.int64)
-        pos = pdf["pos"].to_numpy(dtype=np.uint64)
-        buckets = bucket_of_np(docs_, lo, width, n_buckets)
+    def _pack(batches):
+        for rb in iter_term_groups(batches):
+            n = rb.num_rows
+            terms = _col(rb, "term_id", np.int64)
+            docs_ = _col(rb, "doc_id", np.int64)
+            buckets = bucket_of_np(docs_, lo, width, n_buckets)
 
-        g_new = np.empty(n, dtype=bool)
-        g_new[0] = True
-        g_new[1:] = (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1])
-        d_new = g_new.copy()
-        d_new[1:] |= docs_[1:] != docs_[:-1]
-
-        doc_starts = np.flatnonzero(d_new)               # occurrence space
-        counts = np.diff(np.append(doc_starts, n)).astype(np.uint64)
-        doc_ids = docs_[doc_starts].astype(np.uint64)
-
-        g_rows = np.flatnonzero(g_new)                   # occurrence space
-        g_docs = np.searchsorted(doc_starts, g_rows)     # doc space
-        n_docs = np.diff(np.append(g_docs, doc_starts.size))
-
-        # positions: ONE buffer per group, gap-encoded with an ABSOLUTE
-        # restart at every doc boundary, plus each doc's byte offset inside
-        # its group buffer — the lazy-decode seek table (phrase serving
-        # decodes ONLY candidate docs' position runs, like the blocked
-        # posting codec decodes only surviving blocks)
-        from olaf_spark.codec import _varbyte_encode_arr, delta_encode_grouped
-
-        pv = delta_encode_grouped(pos, doc_starts)
-        buf, nbytes = _varbyte_encode_arr(pv)
-        vstarts = np.concatenate([[0], np.cumsum(nbytes)])
-        g_bytes = vstarts[g_rows]
-        g_ends = np.append(g_bytes[1:], vstarts[-1])
-        raw = buf.tobytes()
-        pos_bufs = [raw[int(s):int(e)] for s, e in zip(g_bytes, g_ends)]
-        doc_abs = vstarts[doc_starts]
-        group_of_doc = np.searchsorted(g_rows, doc_starts, side="right") - 1
-        rel = (doc_abs - g_bytes[group_of_doc]).astype(np.int64)
-        pos_offs = [a.tolist() for a in np.split(rel, g_docs[1:])]
-
-        return pd.DataFrame(
-            {
-                "term_id": terms[g_rows],
-                "bucket": buckets[g_rows].astype("int32"),
-                "n_docs": n_docs.astype("int64"),
-                "doc_ids_bin": encode_grouped(doc_ids, g_docs, delta=True),
-                "pos_counts_bin": encode_grouped(counts, g_docs, delta=False),
-                "pos_bin": pos_bufs,
-                "pos_offs": pos_offs,
-            }
-        )
-
-    def _pack(pdf_iter):
-        for pdf in _iter_term_chunks(pdf_iter):
-            yield _pack_chunk(pdf)
+            g_new = _run_starts(terms, buckets)
+            doc_starts = np.flatnonzero(g_new | _run_starts(docs_))  # occurrences
+            g_rows = np.flatnonzero(g_new)                   # occurrence space
+            pos = _col(rb, "pos", np.uint64)
+            pos_buf, vstart = encode_values(pos, doc_starts)
+            yield _position_rows(
+                terms[g_rows], buckets[g_rows],
+                np.searchsorted(doc_starts, g_rows),         # doc space
+                docs_[doc_starts], np.diff(np.append(doc_starts, n)),
+                pos_buf, vstart[doc_starts],
+            )
 
     return _pack
 
@@ -216,7 +203,7 @@ def build_positions(
     packed = (
         occ.repartition(n_tasks, b_expr, F.col("term_id"))
         .sortWithinPartitions("term_id", "doc_id", "pos")
-        .mapInPandas(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
+        .mapInArrow(_make_pack_positions(lo, width, n_buckets), POSITIONS_SCHEMA)
         .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
     )
     from olaf_spark.indexer import cluster_for_write
@@ -243,110 +230,59 @@ def build_positions(
 
 
 def _make_fold_positions(lo: int, width: int, n_buckets: int, bts):
-    """mapInPandas fn for compaction: each task's slice of positional rows
+    """mapInArrow fn for compaction: each task's slice of positional rows
     (sorted by term_id, first_doc) -> folded rows under the COMPACTED
     corpus's bucket layout. Docs are disjoint across parts, and every doc's
     position run restarts absolute (v2+ layout), so the merge never decodes
-    a position byte: doc headers are re-sorted, tombstoned docs dropped,
-    and each surviving doc's position byte-slice is gathered VERBATIM into
-    the new buffer (one vectorized fancy-index per term). The same
-    doc-range-parallel shape as the postings fold (_compact_chunk): a head
-    term's rows may split across tasks, yielding multiple doc-disjoint
-    output rows per (term, bucket), which the read path already merges.
+    a position byte: doc headers are re-sorted per term (one lexsort over
+    the batch), tombstoned docs dropped, and each surviving doc's position
+    byte-slice is gathered VERBATIM into the new buffer (one vectorized
+    fancy-index per batch). The same doc-range-parallel shape as the
+    postings fold (indexer.make_postings_kernel): a head term's rows may
+    split across tasks, yielding multiple doc-disjoint output rows per
+    (term, bucket), which the read path already merges.
 
     bts: SparkContext BROADCAST of the sorted tombstone array (or None) —
     by handle, not value: closure capture would re-ship a multi-MB delete
     set into every one of the fold's (up to thousands of) task launches."""
-    import pandas as pd
 
-    def _fold_chunk(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        ts_sorted = bts.value
-        terms = pdf["term_id"].to_numpy(dtype=np.int64)
-        id_bins = pdf["doc_ids_bin"].to_numpy()
-        cnt_bins = pdf["pos_counts_bin"].to_numpy()
-        pos_bins = pdf["pos_bin"].to_numpy()
-        offs_col = pdf["pos_offs"].to_numpy()
-        row_new = np.empty(len(pdf), dtype=bool)
-        row_new[0] = True
-        row_new[1:] = terms[1:] != terms[:-1]
-        row_starts = np.flatnonzero(row_new)
-        row_ends = np.append(row_starts[1:], len(pdf))
+    def _fold_batch(rb, ts_sorted):
+        terms_r = _col(rb, "term_id", np.int64)
+        gaps, nd = binary_values(rb.column("doc_ids_bin"))
+        doc_first = seg_starts(nd)
+        ids = restart_cumsum(gaps, doc_first).astype(np.int64)
+        cnts = binary_values(rb.column("pos_counts_bin"))[0]
+        data, row_bytes = binary_bytes(rb.column("pos_bin"))
+        # each doc's byte range inside the column's data buffer: its row's
+        # start + its pos_offs entry, up to the next doc (or the row's end)
+        starts = np.repeat(row_bytes[:-1], nd) + rb.column("pos_offs").flatten().to_numpy()
+        ends = np.empty_like(starts)
+        ends[:-1] = starts[1:]
+        ends[doc_first + nd - 1] = row_bytes[1:]
 
-        cols = ("term_id", "bucket", "n_docs", "doc_ids_bin",
-                "pos_counts_bin", "pos_bin", "pos_offs")
-        out: dict[str, list] = {c: [] for c in cols}
-        for s, e in zip(row_starts, row_ends):
-            ids_l, cnt_l, starts_l, lens_l, bufs = [], [], [], [], []
-            base = 0
-            for i in range(s, e):
-                ids_r = delta_decode(varbyte_decode(bytes(id_bins[i]))).astype(np.int64)
-                cnt_r = varbyte_decode(bytes(cnt_bins[i])).astype(np.int64)
-                buf_r = bytes(pos_bins[i])
-                offs_r = np.asarray(offs_col[i], dtype=np.int64)
-                ids_l.append(ids_r)
-                cnt_l.append(cnt_r)
-                starts_l.append(offs_r + base)
-                lens_l.append(np.append(offs_r[1:], len(buf_r)) - offs_r)
-                bufs.append(buf_r)
-                base += len(buf_r)
-            ids = np.concatenate(ids_l)
-            cnts = np.concatenate(cnt_l)
-            starts = np.concatenate(starts_l)
-            lens = np.concatenate(lens_l)
-            big = b"".join(bufs)
-            order = np.argsort(ids, kind="stable")
-            if ts_sorted is not None and ts_sorted.size:
-                order = order[tombstone_keep_mask(ids[order], ts_sorted)]
-            if order.size == 0:
-                continue  # every posting of this term slice tombstoned away
-            ids_f = ids[order]
-            cnts_f = cnts[order]
-            lens_f = lens[order]
-            gat = _ranges_gather_index(starts[order], lens_f)
-            new_buf = np.frombuffer(big, dtype=np.uint8)[gat].tobytes()
-            doc_offs = np.concatenate([[0], np.cumsum(lens_f)[:-1]]).astype(np.int64)
-            buckets = bucket_of_np(ids_f, lo, width, n_buckets)
-            b_new = np.empty(ids_f.size, dtype=bool)
-            b_new[0] = True
-            b_new[1:] = buckets[1:] != buckets[:-1]
-            g_docs = np.flatnonzero(b_new)  # doc-space group starts
-            g_ends = np.append(g_docs[1:], ids_f.size)
-            g_bytes = doc_offs[g_docs]
-            g_byte_ends = np.append(g_bytes[1:], len(new_buf))
-            out["term_id"].extend([int(terms[s])] * g_docs.size)
-            out["bucket"].extend(buckets[g_docs].tolist())
-            out["n_docs"].extend((g_ends - g_docs).tolist())
-            out["doc_ids_bin"].extend(
-                encode_grouped(ids_f.astype(np.uint64), g_docs, delta=True)
-            )
-            out["pos_counts_bin"].extend(
-                encode_grouped(cnts_f.astype(np.uint64), g_docs, delta=False)
-            )
-            out["pos_bin"].extend(
-                new_buf[int(a):int(b)] for a, b in zip(g_bytes, g_byte_ends)
-            )
-            group_of_doc = np.searchsorted(g_docs, np.arange(ids_f.size), side="right") - 1
-            rel = doc_offs - g_bytes[group_of_doc]
-            out["pos_offs"].extend(a.tolist() for a in np.split(rel, g_docs[1:]))
-        if not out["term_id"]:
-            return None
-        return pd.DataFrame(
-            {
-                "term_id": np.asarray(out["term_id"], dtype=np.int64),
-                "bucket": np.asarray(out["bucket"], dtype=np.int32),
-                "n_docs": np.asarray(out["n_docs"], dtype=np.int64),
-                "doc_ids_bin": out["doc_ids_bin"],
-                "pos_counts_bin": out["pos_counts_bin"],
-                "pos_bin": out["pos_bin"],
-                "pos_offs": out["pos_offs"],
-            }
+        row_new = _run_starts(terms_r)
+        term_of = np.repeat(np.cumsum(row_new) - 1, nd)
+        order = np.lexsort((ids, term_of))
+        if ts_sorted is not None and ts_sorted.size:
+            order = order[tombstone_keep_mask(ids[order], ts_sorted)]
+        if not order.size:
+            return None  # every posting of this slice tombstoned away
+        ids_f, term_f = ids[order], term_of[order]
+        lens = (ends - starts)[order]
+        new_buf = data[_ranges_gather_index(starts[order], lens)]
+        buckets = bucket_of_np(ids_f, lo, width, n_buckets)
+        g_docs = np.flatnonzero(_run_starts(term_f, buckets))   # doc space
+        return _position_rows(
+            terms_r[np.flatnonzero(row_new)[term_f[g_docs]]], buckets[g_docs],
+            g_docs, ids_f, cnts[order], new_buf, seg_starts(lens),
         )
 
-    def _fold(pdf_iter):
-        for pdf in _iter_term_chunks(pdf_iter):
-            res = _fold_chunk(pdf)
-            if res is not None:
-                yield res
+    def _fold(batches):
+        ts_sorted = bts.value
+        for rb in iter_term_groups(batches):
+            out = _fold_batch(rb, ts_sorted)
+            if out is not None:
+                yield out
 
     return _fold
 
@@ -389,11 +325,11 @@ def compact_positions(
     width = max(1, (hi - lo) // n_buckets + 1)
     bts = spark.sparkContext.broadcast(sorted_tombstone_arr(tombstones))
 
-    from olaf_spark.incremental import _first_doc_udf
+    from olaf_spark.incremental import first_doc_col
 
     rows = None
     for d in part_dirs:
-        r = spark.read.parquet(os.path.join(d, "positions"))
+        r = read_packed(spark, os.path.join(d, "positions"), POSITIONS_SCHEMA)
         rows = r if rows is None else rows.unionByName(r)
     if n_merge_tasks is None:
         from olaf_spark.indexer import dir_bytes, merge_task_count
@@ -405,10 +341,10 @@ def compact_positions(
         rows.select(
             "term_id", "doc_ids_bin", "pos_counts_bin", "pos_bin", "pos_offs", "tb"
         )
-        .withColumn("first_doc", _first_doc_udf()(F.col("doc_ids_bin")))
+        .withColumn("first_doc", first_doc_col())
         .repartitionByRange(n_merge_tasks, "tb", "term_id", "first_doc")
         .sortWithinPartitions("term_id", "first_doc")
-        .mapInPandas(
+        .mapInArrow(
             _make_fold_positions(lo, width, n_buckets, bts), POSITIONS_SCHEMA
         )
         .withColumn("tb", shard_from_id_col(F.col("term_id"), cfg.n_segments))
@@ -506,7 +442,7 @@ def _positions_for_docs(
     if idx.size * 1.25 >= n:
         keep = np.zeros(n, dtype=bool)
         keep[idx] = True
-        pos_all = _seg_cumsum(varbyte_decode(buf), counts)
+        pos_all = restart_cumsum(varbyte_decode(buf), seg_starts(counts))
         occ_keep = np.repeat(keep, counts)
         return ids[idx], counts[idx], pos_all[occ_keep]
     starts = offs[idx]
@@ -516,7 +452,9 @@ def _positions_for_docs(
     ends[~interior] = len(buf)
     gat = _ranges_gather_index(starts, ends - starts)
     sel = np.frombuffer(buf, dtype=np.uint8)[gat]
-    return ids[idx], counts[idx], _seg_cumsum(varbyte_decode(sel.tobytes()), counts[idx])
+    return ids[idx], counts[idx], restart_cumsum(
+        varbyte_decode(sel.tobytes()), seg_starts(counts[idx])
+    )
 
 
 def _check_positions(d: str) -> None:

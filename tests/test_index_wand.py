@@ -262,7 +262,7 @@ def test_delete_and_restore(spark, built, tmp_path):
 def test_build_streams_small_arrow_batches(spark, built, tmp_path):
     """Pack/merge correctness must be independent of Arrow batch slicing:
     with tiny batches every head term spans MANY batches and the
-    _iter_term_chunks carry logic must reassemble complete groups (this is
+    iter_term_groups carry logic must reassemble complete groups (this is
     the streaming-decode path that caps task memory at O(term-chunk)
     instead of O(partition))."""
     from olaf_spark.wand import vectorized_topk

@@ -85,7 +85,7 @@ def test_build_stage1_single_exchange(spark):
     seg = (
         pf.repartition(8, b, F.col("term_id"))
         .sortWithinPartitions("term_id", "doc_id")
-        .mapInPandas(_make_pack_stage1(0, 1 << 58, 8), SEGMENT_SCHEMA)
+        .mapInArrow(_make_pack_stage1(0, 1 << 58, 8), SEGMENT_SCHEMA)
     )
     import re
 
@@ -93,7 +93,7 @@ def test_build_stage1_single_exchange(spark):
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", p))
     assert n_exchanges == 1, p
     assert "BatchEvalPython" not in p
-    assert "MapInPandas" in p  # the single vectorized pack step
+    assert "MapInArrow" in p  # the single vectorized pack step
 
 
 def test_top_terms_per_lang_has_no_join(spark):
